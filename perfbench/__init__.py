@@ -1,0 +1,5 @@
+"""Benchmark for the crawl engine: workloads, layer probes and tracing.
+
+Run ``python3 perfbench/run.py --workload NAME --seed N --seconds S --trace 0|1``
+from the repository root; ``BENCHMARK.json`` lists the workloads and metrics.
+"""

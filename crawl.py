@@ -15,10 +15,11 @@ import argparse
 import json
 import os
 import sys
+from dataclasses import replace
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from crawler_engine_spark.config import EngineConfig
+from crawler_engine_spark import config as engine_config
 from crawler_engine_spark.session import get_spark
 
 
@@ -33,12 +34,17 @@ def _parse_rule(spec: str) -> tuple[str, str, int]:
     return name, rest, 10
 
 
+def _flag_or(flag, default):
+    """A CLI override that is unset when None (0 is a real value)."""
+    return default if flag is None else flag
+
+
 def cmd_extract(args) -> None:
     from crawler_engine_spark.operators.extraction import extract_pages
     from crawler_engine_spark.operators.shaping import shape_results
     from crawler_engine_spark.sources.sinks import read_pages, write_results
 
-    cfg = EngineConfig.load(args.config)
+    cfg = engine_config.load(args.config)
     spark = get_spark("crawl-extract")
     pages = read_pages(spark, args.pages)
     opts = cfg.extract_opts
@@ -83,9 +89,9 @@ def cmd_scrape(args) -> None:
 def cmd_crawl(args) -> None:
     import pandas as pd
 
-    from crawler_engine_spark.frontier.rounds import CrawlConfig, CrawlEngine
+    from crawler_engine_spark.frontier.rounds import CrawlEngine
 
-    cfg = EngineConfig.load(args.config)
+    cfg = engine_config.load(args.config)
     spark = get_spark("crawl-rounds")
     if args.robots:
         robots = spark.read.parquet(args.robots)
@@ -98,30 +104,13 @@ def cmd_crawl(args) -> None:
         state_dir=args.state,
         pages_path=args.pages,
         robots=robots,
-        config=CrawlConfig(
+        config=replace(
+            cfg,
             round_seconds=args.round_seconds or cfg.round_seconds,
-            num_salts=cfg.num_salts,
-            bloom_partitions=cfg.bloom_partitions,
-            bloom_bits_per_segment=cfg.bloom_bits_per_segment,
-            mode=cfg.mode,
-            extract_opts=cfg.extract_opts,
-            trap_threshold=(
-                args.trap_threshold
-                if args.trap_threshold is not None
-                else cfg.trap_threshold
-            ),
-            trap_keep_per_pattern=(
-                args.trap_keep
-                if args.trap_keep is not None
-                else cfg.trap_keep_per_pattern
-            ),
+            trap_threshold=_flag_or(args.trap_threshold, cfg.trap_threshold),
+            trap_keep_per_pattern=_flag_or(args.trap_keep, cfg.trap_keep_per_pattern),
             link_rank_budget=args.link_rank_budget or cfg.link_rank_budget,
-            link_rank_iterations=cfg.link_rank_iterations,
-            link_rank_every=(
-                args.link_rank_every
-                if args.link_rank_every is not None
-                else cfg.link_rank_every
-            ),
+            link_rank_every=_flag_or(args.link_rank_every, cfg.link_rank_every),
             link_rank_focus=args.link_rank_focus or cfg.link_rank_focus,
         ),
     )
@@ -479,7 +468,7 @@ def cmd_interactive(args) -> None:
     from crawler_engine_spark.operators.extraction import extract_pages
     from crawler_engine_spark.sources.sinks import read_pages
 
-    cfg = EngineConfig.load(args.config)
+    cfg = engine_config.load(args.config)
     spark = get_spark("crawl-interactive")
     pages = read_pages(spark, args.pages).cache()
 
@@ -534,8 +523,6 @@ INTELLIGENT_EXTRACTOR_EXTRACT_LISTS=true
 INTELLIGENT_EXTRACTOR_EXTRACT_FORMS=false
 INTELLIGENT_EXTRACTOR_EXTRACT_LINKS=true
 INTELLIGENT_EXTRACTOR_EXTRACT_IMAGES=false
-INTELLIGENT_EXTRACTOR_REQUESTS_PER_SECOND=2.0
-INTELLIGENT_EXTRACTOR_DELAY_BETWEEN_REQUESTS=0.5
 # engine-specific (frontier)
 CRAWL_ROUND_SECONDS=10.0
 CRAWL_NUM_SALTS=8
@@ -550,7 +537,7 @@ CRAWL_TRAP_KEEP=100
 def cmd_init(args) -> None:
     """Write a config template (reference cli.py:320-342 `init`): .env,
     yaml, or json — the yaml/json templates round-trip through
-    ``EngineConfig.from_file`` (--config)."""
+    ``config.from_file`` (--config)."""
     fmt = args.format or "env"
     path = args.out or {"env": ".env", "yaml": "config.yaml", "json": "config.json"}[fmt]
     if os.path.exists(path) and not args.force:
@@ -559,7 +546,9 @@ def cmd_init(args) -> None:
     if fmt == "env":
         body = _ENV_TEMPLATE
     else:
-        data = EngineConfig().to_dict()
+        from crawler_engine_spark.frontier.rounds import CrawlConfig
+
+        data = engine_config.to_dict(CrawlConfig())
         if fmt == "yaml":
             try:
                 import yaml

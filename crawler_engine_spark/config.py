@@ -1,186 +1,141 @@
-"""Engine configuration mirroring the reference's knob names.
+"""Loaders for :class:`~crawler_engine_spark.frontier.rounds.CrawlConfig`,
+using the reference's knob names.
 
 The reference loads ``ExtractorConfig`` from env vars prefixed
 ``INTELLIGENT_EXTRACTOR_*`` (models/config.py:248-394) and from yaml/json
 files with sectioned keys (models/config.py:323-394 ``from_file`` /
 ``from_dict``); this engine accepts the same names where they have a
 distributed analog, plus crawl-specific knobs.  AI/browser knobs have no
-analog in fetch-simulate mode and are intentionally absent.
+analog in fetch-simulate mode and are intentionally absent.  Every default
+is ``CrawlConfig()``'s.
 
 Precedence matches the reference: an explicit config file overrides env
-(``EngineConfig.load(path)`` starts from ``from_env()`` and applies the
-file's keys on top; keys absent from the file keep their env/default
-values).
+(``load(path)`` starts from ``from_env()`` and applies the file's keys on
+top; keys absent from the file keep their env/default values).
 """
 
 from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass, field, replace
+from dataclasses import replace
 from typing import Any, Mapping
 
-from .kernels.extract import ExtractOptions
+from .frontier.rounds import CrawlConfig
+
+# file key (``extraction`` section) → env var, for ExtractOptions fields
+_EXTRACT_ENV = {
+    "relevance_threshold": "INTELLIGENT_EXTRACTOR_RELEVANCE_THRESHOLD",
+    "confidence_threshold": "INTELLIGENT_EXTRACTOR_CONFIDENCE_THRESHOLD",
+    "min_content_length": "INTELLIGENT_EXTRACTOR_MIN_CONTENT_LENGTH",
+    "remove_ads": "INTELLIGENT_EXTRACTOR_REMOVE_ADS",
+    "remove_navigation": "INTELLIGENT_EXTRACTOR_REMOVE_NAVIGATION",
+    "enable_hidden_content_handling": "INTELLIGENT_EXTRACTOR_ENABLE_HIDDEN_CONTENT",
+    "extract_tables": "INTELLIGENT_EXTRACTOR_EXTRACT_TABLES",
+    "extract_lists": "INTELLIGENT_EXTRACTOR_EXTRACT_LISTS",
+    "extract_forms": "INTELLIGENT_EXTRACTOR_EXTRACT_FORMS",
+    "extract_links": "INTELLIGENT_EXTRACTOR_EXTRACT_LINKS",
+    "extract_images": "INTELLIGENT_EXTRACTOR_EXTRACT_IMAGES",
+}
+# file key (``crawl`` section) → env var, for CrawlConfig fields
+_CRAWL_ENV = {
+    "round_seconds": "CRAWL_ROUND_SECONDS",
+    "num_salts": "CRAWL_NUM_SALTS",
+    "bloom_partitions": "CRAWL_BLOOM_PARTITIONS",
+    "bloom_bits_per_segment": "CRAWL_BLOOM_BITS",
+    "max_rounds": "CRAWL_MAX_ROUNDS",
+    "trap_threshold": "CRAWL_TRAP_THRESHOLD",
+    "trap_keep_per_pattern": "CRAWL_TRAP_KEEP",
+    "link_rank_budget": "CRAWL_LINK_RANK",
+    "link_rank_iterations": "CRAWL_LINK_RANK_ITERS",
+    "link_rank_every": "CRAWL_LINK_RANK_EVERY",
+    "link_rank_focus": "CRAWL_LINK_RANK_FOCUS",
+}
 
 
-def _env_float(name: str, default: float) -> float:
-    try:
-        return float(os.environ[name])
-    except (KeyError, ValueError):
-        return default
-
-
-def _env_int(name: str, default: int) -> int:
-    try:
-        return int(os.environ[name])
-    except (KeyError, ValueError):
-        return default
-
-
-def _env_bool(name: str, default: bool) -> bool:
+def _env(name: str, default):
+    """Env var parsed as ``default``'s type; unset or unparsable → default."""
     v = os.environ.get(name)
     if v is None:
         return default
-    return v.strip().lower() in ("1", "true", "yes", "on")
+    if isinstance(default, bool):
+        return v.strip().lower() in ("1", "true", "yes", "on")
+    try:
+        return type(default)(v)
+    except ValueError:
+        return default
 
 
-@dataclass
-class EngineConfig:
-    # Politeness (PerformanceConfig analogs, models/config.py:150-172)
-    requests_per_second: float = 2.0
-    delay_between_requests: float = 0.5
-    round_seconds: float = 10.0
-    num_salts: int = 8
+def _env_fields(obj, env_names: Mapping[str, str]) -> dict:
+    return {k: _env(name, getattr(obj, k)) for k, name in env_names.items()}
 
-    # Frontier / seen set
-    bloom_partitions: int = 32
-    bloom_bits_per_segment: int = 1 << 20
-    max_rounds: int = 100
-    # Crawl-trap guard (frontier/traps.py); 0 disables
-    trap_threshold: int = 0
-    trap_keep_per_pattern: int = 100
-    # PageRank budget feedback over the crawl's host graph
-    # (operators/linkrank.py, frontier/rounds.py step 1b)
-    link_rank_budget: bool = False
-    link_rank_iterations: int = 5
-    link_rank_every: int = 1
-    link_rank_focus: bool = False
 
-    # Extraction (ExtractionConfig analogs, models/config.py:110-147)
-    mode: str | None = None  # None → adaptive ("adaptive always wins")
-    extract_opts: ExtractOptions = field(default_factory=ExtractOptions)
-
-    @classmethod
-    def from_env(cls) -> "EngineConfig":
-        opts = ExtractOptions(
-            relevance_threshold=_env_float("INTELLIGENT_EXTRACTOR_RELEVANCE_THRESHOLD", 0.6),
-            confidence_threshold=_env_float("INTELLIGENT_EXTRACTOR_CONFIDENCE_THRESHOLD", 0.7),
-            min_content_length=_env_int("INTELLIGENT_EXTRACTOR_MIN_CONTENT_LENGTH", 100),
-            remove_ads=_env_bool("INTELLIGENT_EXTRACTOR_REMOVE_ADS", True),
-            remove_navigation=_env_bool("INTELLIGENT_EXTRACTOR_REMOVE_NAVIGATION", True),
-            enable_hidden_content_handling=_env_bool(
-                "INTELLIGENT_EXTRACTOR_ENABLE_HIDDEN_CONTENT", True
-            ),
-            extract_tables=_env_bool("INTELLIGENT_EXTRACTOR_EXTRACT_TABLES", True),
-            extract_lists=_env_bool("INTELLIGENT_EXTRACTOR_EXTRACT_LISTS", True),
-            extract_forms=_env_bool("INTELLIGENT_EXTRACTOR_EXTRACT_FORMS", False),
-            extract_links=_env_bool("INTELLIGENT_EXTRACTOR_EXTRACT_LINKS", True),
-            extract_images=_env_bool("INTELLIGENT_EXTRACTOR_EXTRACT_IMAGES", False),
-        )
-        mode = os.environ.get("INTELLIGENT_EXTRACTOR_STRATEGY") or None
-        return cls(
-            requests_per_second=_env_float("INTELLIGENT_EXTRACTOR_REQUESTS_PER_SECOND", 2.0),
-            delay_between_requests=_env_float("INTELLIGENT_EXTRACTOR_DELAY_BETWEEN_REQUESTS", 0.5),
-            round_seconds=_env_float("CRAWL_ROUND_SECONDS", 10.0),
-            num_salts=_env_int("CRAWL_NUM_SALTS", 8),
-            bloom_partitions=_env_int("CRAWL_BLOOM_PARTITIONS", 32),
-            bloom_bits_per_segment=_env_int("CRAWL_BLOOM_BITS", 1 << 20),
-            max_rounds=_env_int("CRAWL_MAX_ROUNDS", 100),
-            trap_threshold=_env_int("CRAWL_TRAP_THRESHOLD", 0),
-            trap_keep_per_pattern=_env_int("CRAWL_TRAP_KEEP", 100),
-            link_rank_budget=_env_bool("CRAWL_LINK_RANK", False),
-            link_rank_iterations=_env_int("CRAWL_LINK_RANK_ITERS", 5),
-            link_rank_every=_env_int("CRAWL_LINK_RANK_EVERY", 1),
-            link_rank_focus=_env_bool("CRAWL_LINK_RANK_FOCUS", False),
-            mode=mode,
-            extract_opts=opts,
-        )
-
-    # -- file / dict loaders (reference models/config.py:323-394) ----------
-
-    _EXTRACT_OPT_KEYS = (
-        "relevance_threshold", "confidence_threshold", "min_content_length",
-        "remove_ads", "remove_navigation", "enable_hidden_content_handling",
-        "extract_tables", "extract_lists", "extract_forms", "extract_links",
-        "extract_images",
-    )
-    _PERF_KEYS = ("requests_per_second", "delay_between_requests")
-    _CRAWL_KEYS = (
-        "round_seconds", "num_salts", "bloom_partitions",
-        "bloom_bits_per_segment", "max_rounds",
-        "trap_threshold", "trap_keep_per_pattern",
-        "link_rank_budget", "link_rank_iterations", "link_rank_every",
-        "link_rank_focus",
+def from_env() -> CrawlConfig:
+    cfg = CrawlConfig()
+    return replace(
+        cfg,
+        mode=os.environ.get("INTELLIGENT_EXTRACTOR_STRATEGY") or cfg.mode,
+        extract_opts=replace(cfg.extract_opts, **_env_fields(cfg.extract_opts, _EXTRACT_ENV)),
+        **_env_fields(cfg, _CRAWL_ENV),
     )
 
-    @classmethod
-    def from_dict(cls, data: Mapping[str, Any], base: "EngineConfig" | None = None) -> "EngineConfig":
-        """Sectioned dict → config, overriding ``base`` (defaults if None).
 
-        Sections mirror the reference's ``from_dict``: ``extraction``
-        (strategy + kernel thresholds/toggles), ``performance`` (politeness
-        rates), plus this engine's ``crawl`` section.  Unknown sections and
-        keys are ignored, like the reference."""
-        cfg = base if base is not None else cls()
-        ex = dict(data.get("extraction") or {})
-        if "strategy" in ex:
-            cfg = replace(cfg, mode=ex["strategy"] or None)
-        opt_overrides = {k: ex[k] for k in cls._EXTRACT_OPT_KEYS if k in ex}
-        if opt_overrides:
-            cfg = replace(cfg, extract_opts=replace(cfg.extract_opts, **opt_overrides))
-        perf = dict(data.get("performance") or {})
-        cfg = replace(cfg, **{k: perf[k] for k in cls._PERF_KEYS if k in perf})
-        crawl = dict(data.get("crawl") or {})
-        cfg = replace(cfg, **{k: crawl[k] for k in cls._CRAWL_KEYS if k in crawl})
-        return cfg
+# -- file / dict loaders (reference models/config.py:323-394) --------------
 
-    @classmethod
-    def from_file(cls, filepath: str, base: "EngineConfig" | None = None) -> "EngineConfig":
-        """yaml/json config file → config (suffix-dispatched, like the
-        reference's ``from_file``)."""
-        lower = filepath.lower()
-        if lower.endswith((".yaml", ".yml")):
-            try:
-                import yaml
-            except ImportError as exc:  # pragma: no cover - yaml is bundled
-                raise ValueError(
-                    f"pyyaml is required to load {filepath}; use a .json config"
-                ) from exc
-            with open(filepath, encoding="utf-8") as f:
-                data = yaml.safe_load(f) or {}
-        elif lower.endswith(".json"):
-            with open(filepath, encoding="utf-8") as f:
-                data = json.load(f)
-        else:
-            raise ValueError(f"Unsupported configuration file format: {filepath}")
-        return cls.from_dict(data, base=base)
 
-    @classmethod
-    def load(cls, config_file: str | None = None) -> "EngineConfig":
-        """The CLI entrypoint: env first, then the file's keys on top."""
-        cfg = cls.from_env()
-        if config_file:
-            cfg = cls.from_file(config_file, base=cfg)
-        return cfg
+def from_dict(data: Mapping[str, Any], base: CrawlConfig | None = None) -> CrawlConfig:
+    """Sectioned dict → config, overriding ``base`` (defaults if None).
 
-    def to_dict(self) -> dict:
-        """Sectioned dict that round-trips through from_dict (scalar knobs
-        only — selector tuples are CLI/API surface, not file config)."""
-        return {
-            "extraction": {
-                "strategy": self.mode,
-                **{k: getattr(self.extract_opts, k) for k in self._EXTRACT_OPT_KEYS},
-            },
-            "performance": {k: getattr(self, k) for k in self._PERF_KEYS},
-            "crawl": {k: getattr(self, k) for k in self._CRAWL_KEYS},
-        }
+    Sections mirror the reference's ``from_dict``: ``extraction`` (strategy
+    + kernel thresholds/toggles) plus this engine's ``crawl`` section.
+    Unknown sections and keys are ignored, like the reference."""
+    cfg = base if base is not None else CrawlConfig()
+    ex = dict(data.get("extraction") or {})
+    if "strategy" in ex:
+        cfg = replace(cfg, mode=ex["strategy"] or None)
+    opt_overrides = {k: ex[k] for k in _EXTRACT_ENV if k in ex}
+    if opt_overrides:
+        cfg = replace(cfg, extract_opts=replace(cfg.extract_opts, **opt_overrides))
+    crawl = dict(data.get("crawl") or {})
+    return replace(cfg, **{k: crawl[k] for k in _CRAWL_ENV if k in crawl})
+
+
+def from_file(filepath: str, base: CrawlConfig | None = None) -> CrawlConfig:
+    """yaml/json config file → config (suffix-dispatched, like the
+    reference's ``from_file``)."""
+    lower = filepath.lower()
+    if lower.endswith((".yaml", ".yml")):
+        try:
+            import yaml
+        except ImportError as exc:  # pragma: no cover - yaml is bundled
+            raise ValueError(
+                f"pyyaml is required to load {filepath}; use a .json config"
+            ) from exc
+        with open(filepath, encoding="utf-8") as f:
+            data = yaml.safe_load(f) or {}
+    elif lower.endswith(".json"):
+        with open(filepath, encoding="utf-8") as f:
+            data = json.load(f)
+    else:
+        raise ValueError(f"Unsupported configuration file format: {filepath}")
+    return from_dict(data, base=base)
+
+
+def load(config_file: str | None = None) -> CrawlConfig:
+    """The CLI entrypoint: env first, then the file's keys on top."""
+    cfg = from_env()
+    if config_file:
+        cfg = from_file(config_file, base=cfg)
+    return cfg
+
+
+def to_dict(cfg: CrawlConfig) -> dict:
+    """Sectioned dict that round-trips through from_dict (file-settable
+    knobs only — the rest of CrawlConfig is API surface)."""
+    return {
+        "extraction": {
+            "strategy": cfg.mode,
+            **{k: getattr(cfg.extract_opts, k) for k in _EXTRACT_ENV},
+        },
+        "crawl": {k: getattr(cfg, k) for k in _CRAWL_ENV},
+    }

@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 
 from .. import caches
 
-DEFAULT_REQUESTS_PER_SECOND = 2.0  # models/config.py:159
 DEFAULT_CRAWL_DELAY_S = 0.5        # models/config.py:161
 DEFAULT_ROUND_SECONDS = 10.0
 DEFAULT_NUM_SALTS = 8

@@ -77,11 +77,6 @@ class CrawlConfig:
     # resume source of truth); compaction only bounds the anti-join's read
     # fan-in on long crawls.
     compact_every: int = 0
-    # Prefilter backend: 'bloom' (smaller, append-only) or 'cuckoo'
-    # (deletable — enables recrawl/TTL via CuckooSeenSet.delete).  Both keep
-    # the no-false-negative contract; exactness always rests on the exact
-    # anti-join either way.
-    seen_filter: str = "bloom"
     # Crawl-trap guard (frontier/traps.py): flag any (host, URL-template)
     # whose next-frontier distinct-URL count reaches trap_threshold and keep
     # only the trap_keep_per_pattern lowest-hash URLs from it.  0 disables —
@@ -150,29 +145,23 @@ class CrawlEngine:
         self.pages_path = pages_path
         self.robots = robots
         self.cfg = config
-        if config.seen_filter == "cuckoo":
-            from .cuckoo import CuckooSeenSet
-
-            # round the bloom-sizing knob down to the cuckoo backend's
-            # power-of-two bucket requirement (any CRAWL_BLOOM_BITS value
-            # stays valid for either backend)
-            raw = max(config.bloom_bits_per_segment // 64, 4)
-            self.bloom = CuckooSeenSet(
-                num_partitions=config.bloom_partitions,
-                buckets_per_segment=1 << (raw.bit_length() - 1),
-            )
-        else:
-            self.bloom = BloomSeenSet(
-                num_partitions=config.bloom_partitions,
-                bits_per_segment=config.bloom_bits_per_segment,
-            )
+        self.bloom = BloomSeenSet(
+            num_partitions=config.bloom_partitions,
+            bits_per_segment=config.bloom_bits_per_segment,
+        )
         self._check_state_format()
 
     def _check_state_format(self) -> None:
         """Fail fast when resuming a state_dir written by an incompatible
         checkpoint layout (e.g. the pre-v2 layout with a separate 'fetched'
-        dir and no 'depth' column in seen_delta) instead of mis-reading it."""
-        if self.last_committed() < 0:
+        dir and no 'depth' column in seen_delta) instead of mis-reading it.
+
+        Also rejects a state_dir whose last round holds cuckoo-filter
+        segments (``cuckoo_*.bin``, written by the removed cuckoo backend):
+        the bloom reader would load all-zero segments, flag every candidate
+        definitely-new, skip the exact anti-join and re-fetch seen URLs."""
+        last = self.last_committed()
+        if last < 0:
             return
         rec = self._read_commit(0)
         found = rec.get("format_version")
@@ -182,6 +171,16 @@ class CrawlEngine:
                 f"{found!r}; this engine reads format {STATE_FORMAT_VERSION}. "
                 "Re-crawl into a fresh state_dir (cross-version resume is "
                 "not supported)."
+            )
+        bloom_dir = os.path.join(self._round_dir(last), "bloom")
+        if os.path.isdir(bloom_dir) and any(
+            n.startswith("cuckoo_") and n.endswith(".bin")
+            for n in os.listdir(bloom_dir)
+        ):
+            raise RuntimeError(
+                f"state_dir {self.state_dir!r} holds cuckoo-filter seen-set "
+                f"segments (round {last}); this engine reads only bloom "
+                "segments. Re-crawl into a fresh state_dir."
             )
 
     # ------------------------------------------------------------- layout
@@ -214,7 +213,11 @@ class CrawlEngine:
     # -------------------------------------------------------------- seeds
     def init_from_seeds(self, seeds: DataFrame) -> None:
         """Round 0: seed frontier.  ``seeds`` columns: url, seed_rank, query.
-        Seeds order by seed_rank → priority (0, -1, seed_rank)."""
+        Seeds order by seed_rank → priority (0, -1, seed_rank).
+
+        Invalid seed URLs are dropped.  An empty or all-invalid seed set
+        still commits round 0, with ``frontier_size`` 0; round 1 then
+        returns None without a commit, so :meth:`run` returns no records."""
         canon = urlops.canonical_url_col(F.col("url"))
         frontier = (
             seeds.select(
@@ -367,10 +370,9 @@ class CrawlEngine:
         frontier rows (priority = original depth, original fetch_seq) that
         the next round folds into its frontier; consumption is recorded in
         that round's commit, so a crash between expire and commit simply
-        re-consumes.  The prefilter is NOT touched: a stale maybe_seen just
-        routes the URL through the exact anti-join, which now lets it pass
-        (the cuckoo backend's delete can additionally tighten the filter
-        out-of-band).  Returns the number of URLs expired."""
+        re-consumes.  The bloom prefilter is NOT touched: a stale maybe_seen
+        just routes the URL through the exact anti-join, which now lets it
+        pass.  Returns the number of URLs expired."""
         seen = self.seen()
         if seen is None:
             return 0
@@ -583,7 +585,8 @@ class CrawlEngine:
                 if n not in done and not n.endswith(".tmp")
             )
         # Emptiness check comes free from the previous round's commit record
-        # (round 0 always has seeds); pending requeue keeps the crawl alive.
+        # (round 0 records the valid seed count); pending requeue keeps the
+        # crawl alive.
         if prev.get("frontier_size") == 0 and not pending_requeue:
             return None
         frontier = self._read_frontier(k - 1)

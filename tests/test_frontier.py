@@ -401,6 +401,50 @@ def test_resume_rejects_foreign_state_format(spark, world):
         )
 
 
+def test_resume_rejects_cuckoo_segments(spark, world):
+    """A state_dir whose bloom/ dir holds cuckoo-filter segments (written
+    by the removed cuckoo backend) fails fast on resume: the bloom reader
+    would see no segment files, flag every candidate definitely-new and
+    re-fetch already-fetched URLs."""
+    eng = _make_engine(spark, world, "state_cuckoo")
+    eng.run(max_rounds=1)
+    bloom_dir = os.path.join(eng._round_dir(1), "bloom")
+    segments = [n for n in os.listdir(bloom_dir) if n.startswith("segment_")]
+    assert segments
+    for name in segments:
+        os.rename(
+            os.path.join(bloom_dir, name),
+            os.path.join(bloom_dir, name.replace("segment_", "cuckoo_")),
+        )
+    with pytest.raises(RuntimeError, match="cuckoo"):
+        CrawlEngine(
+            spark,
+            state_dir=eng.state_dir,
+            pages_path=world["pages_path"],
+            robots=world["robots_df"],
+            config=CrawlConfig(round_seconds=ROUND_SECONDS, bloom_partitions=8,
+                               bloom_bits_per_segment=1 << 16),
+        )
+
+
+def test_empty_seed_set_commits_empty_round0_then_stops(spark, world):
+    """An empty or all-invalid seed set commits round 0 with
+    frontier_size 0; round 1 then returns None without a commit."""
+    for name, urls in (("empty", []), ("invalid", ["", "  ", "http://", "//x"])):
+        state = os.path.join(world["root"], f"state_seeds_{name}")
+        eng = CrawlEngine(spark, state, world["pages_path"], world["robots_df"],
+                          CrawlConfig(round_seconds=ROUND_SECONDS))
+        eng.init_from_seeds(spark.createDataFrame(
+            [(u, i, None) for i, u in enumerate(urls)],
+            "url string, seed_rank int, query string",
+        ))
+        assert eng.committed_rounds() == [0], name
+        assert eng._read_commit(0)["frontier_size"] == 0, name
+        assert eng.run_round(1) is None, name
+        assert eng.committed_rounds() == [0], name
+        assert eng.run() == [], name
+
+
 def test_bloom_no_false_negatives(spark, world, engine_run):
     """Everything in the exact seen set must be flagged maybe_seen by the
     bloom segments (no false negatives — the exactness precondition)."""

@@ -10,8 +10,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from crawler_engine_spark.config import EngineConfig
+from crawler_engine_spark import config
 from crawler_engine_spark.data import gen
+from crawler_engine_spark.frontier.rounds import CrawlConfig
 from crawler_engine_spark.kernels.scrape import scrape_page_metadata
 from crawler_engine_spark.operators import shaping
 from crawler_engine_spark.operators.scrape import scrape_metadata
@@ -190,7 +191,7 @@ def test_engine_config_from_env(monkeypatch):
     monkeypatch.setenv("INTELLIGENT_EXTRACTOR_STRATEGY", "semantic")
     monkeypatch.setenv("CRAWL_ROUND_SECONDS", "42")
     monkeypatch.setenv("CRAWL_LINK_RANK", "true")
-    cfg = EngineConfig.from_env()
+    cfg = config.from_env()
     assert cfg.extract_opts.relevance_threshold == 0.4
     assert cfg.extract_opts.extract_forms is True
     assert cfg.mode == "semantic"
@@ -205,25 +206,27 @@ def test_engine_config_file_overrides_env(monkeypatch, tmp_path):
     monkeypatch.setenv("INTELLIGENT_EXTRACTOR_STRATEGY", "semantic")
     monkeypatch.setenv("INTELLIGENT_EXTRACTOR_MIN_CONTENT_LENGTH", "77")
     monkeypatch.setenv("CRAWL_NUM_SALTS", "4")
+    monkeypatch.setenv("CRAWL_TRAP_THRESHOLD", "9")
     cfg_file = tmp_path / "engine.json"
     cfg_file.write_text(json.dumps({
         "extraction": {"strategy": "structured", "relevance_threshold": 0.25},
-        "performance": {"requests_per_second": 9.5},
+        "crawl": {"trap_threshold": 500},
     }))
-    cfg = EngineConfig.load(str(cfg_file))
+    cfg = config.load(str(cfg_file))
+    assert isinstance(cfg, CrawlConfig)
     assert cfg.mode == "structured"              # file wins
     assert cfg.extract_opts.relevance_threshold == 0.25
-    assert cfg.requests_per_second == 9.5
+    assert cfg.trap_threshold == 500
     assert cfg.extract_opts.min_content_length == 77  # env survives
     assert cfg.num_salts == 4
 
 
 def test_engine_config_yaml_roundtrip(tmp_path):
     yaml = pytest.importorskip("yaml")
-    base = EngineConfig()
+    base = CrawlConfig()
     cfg_file = tmp_path / "engine.yaml"
-    cfg_file.write_text(yaml.safe_dump(base.to_dict()))
-    loaded = EngineConfig.from_file(str(cfg_file))
+    cfg_file.write_text(yaml.safe_dump(config.to_dict(base)))
+    loaded = config.from_file(str(cfg_file))
     assert loaded == base
 
 
@@ -231,7 +234,7 @@ def test_engine_config_rejects_unknown_suffix(tmp_path):
     p = tmp_path / "engine.toml"
     p.write_text("")
     with pytest.raises(ValueError, match="Unsupported configuration"):
-        EngineConfig.from_file(str(p))
+        config.from_file(str(p))
 
 
 def test_cli_rule_parsing_handles_colons():
